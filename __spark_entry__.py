@@ -710,9 +710,11 @@ def q_tile_encode(spark, sf_dir):
     )
     # NOTE: measured A/B at sf0.1 — a .persist() before this global sort
     # costs 14-53s (cache population contends with execution memory for
-    # the UDF stages) while the plain sort chain runs in ~10s (the range
-    # sampler reuses the materialized hash-exchange outputs, so the
-    # pre-shuffle work is not recomputed); keep the plain chain
+    # the UDF stages) while the plain sort chain runs in ~10s; keep the
+    # plain chain. It is NOT free: this orderBy's range sampler re-runs
+    # the whole encode+decode (MapInArrow emits 2 x 301,819 rows at
+    # sf0.1 under a noop sink; perfbench tile-build reports
+    # materialize.encode_passes = 2.0).
     return decode_tiles(tiles).orderBy("z", "x", "y", "feature_id")
 
 

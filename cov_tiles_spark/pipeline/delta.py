@@ -12,14 +12,20 @@ the full-recompute result (asserted in tests), while time travel keeps
 every previous version readable.
 
 Scale shape: the checksum pass is a pure JVM hash aggregation over the
-(already computed) assignment — no Python, map-side combined; the
-changed-set is resolved with a join against the manifest (never a
-driver-side key list); unchanged tiles cost one aggregation row each,
-not an encode."""
+(already computed) assignment — no Python, map-side combined. ONE
+status pass then full-outer-joins it with the previous run's checksums
+into a cached per-tile status frame (present / changed / vanished, plus
+bucket-widened re-encode and empty-bucket tombstone flags), and one
+aggregation over that frame yields every count the run needs. The
+tombstone keys, the re-encode semi-join and the new checksum rows are
+all filters of the cached frame: keys stay distributed (never a
+driver-side key list), the join graph is planned and run once, and
+unchanged tiles cost one status row each, not an encode."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cov_tiles_spark.pipeline.lineage import IcebergLite
@@ -29,6 +35,15 @@ from cov_tiles_spark.pipeline.materialize import (
     encode_assigned,
 )
 from cov_tiles_spark.spatial.tiling import DEFAULT_EXTENT
+
+# Tiles per re-encode task before the exchange grows past one task per
+# core. Every Python task pays ~0.3 s of CPU before its first row
+# (worker hand-off plus pyspark's per-task import-cache invalidation,
+# which re-reads the pyspark.zip directory), while re-encoding a small
+# tile costs ~1.2 ms: 0.3 s / 1.2 ms = 250 tiles is where a task's
+# fixed cost stops outweighing the encode work it parallelises.
+_TILES_PER_ENCODE_TASK = 250
+
 
 def _tile_key() -> F.Column:
     # underscore join: "/" in hive partition values gets %-escaped in
@@ -57,6 +72,94 @@ def _bucket_of(key: F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("string")
 
 
+def _part_of(partition_buckets: int | None) -> F.Column:
+    """Overwrite partition of the row's ``tile_key``: the key itself, or
+    its bucket."""
+    if partition_buckets is None:
+        return F.col("tile_key")
+    return _bucket_of(F.col("tile_key"), partition_buckets)
+
+
+def _previous_inputs(lake: IcebergLite, table: str) -> DataFrame:
+    """The latest committed ``<table>_inputs`` checksums (empty on the
+    first run)."""
+    try:
+        prev = lake.read_table(f"{table}_inputs", latest_only=True)
+    except FileNotFoundError:  # first run: everything is new
+        return lake.spark.createDataFrame(
+            [], "tile_key string, _prev_sum long, _prev_n long"
+        )
+    return prev.select(
+        "tile_key",
+        F.col("input_checksum").alias("_prev_sum"),
+        F.col("n_rows").alias("_prev_n"),
+    )
+
+
+def _tile_status(
+    cur: DataFrame, prev: DataFrame, partition_buckets: int | None
+) -> DataFrame:
+    """One row per tile in either checksum set: ``tile_key``,
+    ``input_checksum``, ``n_rows`` (null for vanished tiles), the
+    overwrite partition ``_part`` and the flags ``_present`` (has
+    current input rows), ``_changed``, ``_vanished``, ``_reencode`` and
+    ``_tomb`` (its ``_part`` needs a tombstone snapshot).
+
+    n_rows is compared alongside the checksum: bit_xor cancels when an
+    EVEN number of identical rows is added (x^x=0), so "same checksum"
+    alone wrongly skips such edits; the row count breaks the tie.
+
+    Per-tile partitions (``partition_buckets=None``) re-encode exactly
+    the changed tiles and tombstone each vanished one — in BOTH tables:
+    payloads so readers stop seeing it, inputs so a later resurrection
+    with identical rows reads as new-not-unchanged and re-encodes.
+
+    With buckets, a bucket's overwrite snapshot must carry ALL its
+    tiles or latest-wins reads would drop the unchanged ones, so a
+    window over the bucket widens ``_reencode`` to every present tile
+    of a bucket holding a changed or vanished tile (the rewritten
+    bucket simply no longer contains the vanished ones). A bucket with
+    no present tile gets no overwrite snapshot at all, so its vanished
+    rows carry ``_tomb`` instead."""
+    present = F.col("n_rows").isNotNull()
+    changed = present & (
+        F.col("_prev_sum").isNull()
+        | (F.col("_prev_sum") != F.col("input_checksum"))
+        | (F.col("_prev_n") != F.col("n_rows"))
+    )
+    status = cur.join(prev, "tile_key", "full_outer").select(
+        "tile_key",
+        "input_checksum",
+        "n_rows",
+        _part_of(partition_buckets).alias("_part"),
+        present.alias("_present"),
+        changed.alias("_changed"),
+        (~present).alias("_vanished"),
+    )
+    if partition_buckets is None:
+        return status.withColumns(
+            {"_reencode": F.col("_changed"), "_tomb": F.col("_vanished")}
+        )
+    bucket = Window.partitionBy("_part")
+    touched = F.max(F.col("_changed") | F.col("_vanished")).over(bucket)
+    occupied = F.max("_present").over(bucket)
+    return status.withColumns(
+        {
+            "_reencode": F.col("_present") & touched,
+            "_tomb": F.col("_vanished") & ~occupied,
+        }
+    )
+
+
+def _reencode_parts(sc: SparkContext, n_tiles: int) -> int:
+    """Exchange width for re-encoding ``n_tiles``: one task per core
+    until tasks would exceed ``_TILES_PER_ENCODE_TASK`` tiles, then
+    growing up to ``encode_assigned``'s default width."""
+    cores = sc.defaultParallelism
+    wanted = -(-n_tiles // _TILES_PER_ENCODE_TASK)
+    return min(max(cores, wanted), max(cores * 8, 16))
+
+
 def delta_materialize(
     lake: IcebergLite,
     images: DataFrame,
@@ -73,14 +176,16 @@ def delta_materialize(
     ``removed`` counts tiles whose inputs vanished — tombstoned, or
     dropped via their bucket's rewrite).
 
-    Change detection compares (input_checksum, n_rows) per tile — the
-    row count guards the bit_xor checksum's even-duplicate blind spot —
-    and a reverse anti-join finds tiles with no surviving input rows so
-    their stale payloads are removed from latest-wins reads.
-
     The previous run's input checksums live in the ``<table>_inputs``
-    table (committed alongside the payloads, latest-wins); the current
-    assignment's checksums are joined against them to find work.
+    table (committed alongside the payloads, latest-wins). One status
+    pass (:func:`_tile_status`) full-outer-joins the current assignment's
+    checksums with them into a cached frame, and a single aggregation
+    over it returns every count; tombstone commits, the re-encode and
+    the new ``<table>_inputs`` rows all filter that frame. Tombstones
+    are committed only when the pass counted some, and the re-encode
+    exchange is sized to the re-encoded tile count
+    (:func:`_reencode_parts`). Every cached frame is released on
+    return, error or not.
 
     ``partition_buckets``: overwrite granularity. Per-tile partitions
     (None) re-encode the minimum but create one hive directory per tile
@@ -94,131 +199,78 @@ def delta_materialize(
     2.1k scattered changed tiles). Pick by edit locality; both modes
     are byte-identical to a full recompute."""
     cols = ["image_id", "caption", "fmt", "w", "h", "phash", "lon", "lat"]
+    prev = _previous_inputs(lake, table)
     assigned = assign_tiles(images.select(*cols), zooms, extent).persist()
-    cur = input_checksums(assigned).persist()
-    total = cur.count()
-
+    status = None
     try:
-        prev_latest = lake.read_table(
-            f"{table}_inputs", latest_only=True
-        ).select(
-            "tile_key",
-            F.col("input_checksum").alias("_prev_sum"),
-            F.col("n_rows").alias("_prev_n"),
-        )
-    except FileNotFoundError:  # first run: everything is new
-        prev_latest = lake.spark.createDataFrame(
-            [], "tile_key string, _prev_sum long, _prev_n long"
-        )
-    # n_rows is compared alongside the checksum: bit_xor cancels when an
-    # EVEN number of identical rows is added (x^x=0), so "same checksum"
-    # alone wrongly skips such edits; the row count breaks the tie.
-    diff_keys = (
-        cur.join(prev_latest, "tile_key", "left")
-        .filter(
-            F.col("_prev_sum").isNull()
-            | (F.col("_prev_sum") != F.col("input_checksum"))
-            | (F.col("_prev_n") != F.col("n_rows"))
-        )
-        .select("tile_key")
-    )
-    # tiles whose input rows ALL disappeared are absent from `cur`, so
-    # the forward join above never sees them; find them with the reverse
-    # anti-join and tombstone them (or fold their buckets into the
-    # rewrite) so latest-wins reads drop the stale payload.
-    vanished_keys = prev_latest.join(
-        cur, "tile_key", "left_anti"
-    ).select("tile_key").persist()
-    n_removed = vanished_keys.count()
-    if partition_buckets is None:
-        changed_keys = diff_keys.persist()
-        part_of_tile = F.col("tile_key")
-        if n_removed:
-            # per-tile partitions: a vanished tile gets a manifest-only
-            # tombstone snapshot in BOTH tables (payloads so readers stop
-            # seeing it, inputs so a later resurrection with identical
-            # rows reads as new-not-unchanged and re-encodes)
-            lake.commit_tombstones(table, "tombstone", vanished_keys, "tile_key")
-            lake.commit_tombstones(
-                f"{table}_inputs", "tombstone", vanished_keys, "tile_key"
+        status = _tile_status(
+            input_checksums(assigned), prev, partition_buckets
+        ).persist()
+        n = status.agg(
+            F.count_if("_present").alias("total"),
+            F.count_if("_reencode").alias("reencode"),
+            F.count_if("_vanished").alias("removed"),
+            F.count_distinct(F.when(F.col("_tomb"), F.col("_part"))).alias("tomb"),
+        ).first()
+        if n.tomb:
+            dead = status.filter("_tomb").select("_part").distinct()
+            lake.commit_tombstones(table, "tombstone", dead, "_part")
+            lake.commit_tombstones(f"{table}_inputs", "tombstone", dead, "_part")
+        if n.reencode:
+            _reencode(
+                lake, table, assigned, status.filter("_reencode"), n.reencode,
+                max_features_per_tile, wire_format, partition_buckets,
             )
-    else:
-        # widen to whole buckets: a bucket's overwrite snapshot must
-        # carry ALL its tiles or latest-wins reads would drop the
-        # unchanged ones. Vanished tiles fold their buckets in too — the
-        # rewritten bucket simply no longer contains them.
-        changed_buckets = diff_keys.union(vanished_keys).select(
-            _bucket_of(F.col("tile_key"), partition_buckets).alias("_b")
-        ).distinct()
-        changed_keys = (
-            cur.join(
-                changed_buckets,
-                _bucket_of(F.col("tile_key"), partition_buckets)
-                == changed_buckets["_b"],
-                "left_semi",
-            )
-            .select("tile_key")
-            .persist()
-        )
-        part_of_tile = _bucket_of(F.col("tile_key"), partition_buckets)
-        if n_removed:
-            # a bucket whose CURRENT tile set is empty gets no overwrite
-            # snapshot from the rewrite below (nothing to write), so its
-            # stale rows would survive — tombstone those buckets directly
-            empty_buckets = changed_buckets.join(
-                cur.select(
-                    _bucket_of(F.col("tile_key"), partition_buckets).alias("_b")
-                ).distinct(),
-                "_b",
-                "left_anti",
-            )
-            lake.commit_tombstones(table, "tombstone", empty_buckets, "_b")
-            lake.commit_tombstones(
-                f"{table}_inputs", "tombstone", empty_buckets, "_b"
-            )
-    n_changed = changed_keys.count()
-
-    if n_changed:
-        todo = assigned.join(
-            changed_keys,
-            _tile_key() == changed_keys["tile_key"],
-            "left_semi",
-        )
-        payloads = (
-            encode_assigned(
-                todo,
-                max_features_per_tile=max_features_per_tile,
-                with_mvt_baseline=False,
-                wire_format=wire_format,
-            )
-            .withColumn("tile_key", _tile_key())
-            .withColumn("_part", part_of_tile)
-        )
-        # cluster=True: one file per bucket dir instead of one per
-        # (encode task x bucket) — 812 -> 32 files at sf0.1, and the
-        # latest-wins read scan shrinks accordingly (guide §6)
-        lake.commit_partitions(
-            table, "encode", payloads, "_part", mode="overwrite",
-            cluster=True,
-        )
-        # record the inputs that produced those payloads, same snapshot
-        # discipline: one row per re-encoded tile
-        new_sums = (
-            cur.join(changed_keys, "tile_key", "left_semi")
-            .select("tile_key", "input_checksum", "n_rows")
-            .withColumn("_part", part_of_tile)
-        )
-        lake.commit_partitions(
-            f"{table}_inputs", "inputs", new_sums, "_part", mode="overwrite",
-            cluster=True,
-        )
-    assigned.unpersist()
-    cur.unpersist()
-    changed_keys.unpersist()
-    vanished_keys.unpersist()
+    finally:
+        for df in (assigned, status):
+            if df is not None:
+                df.unpersist()
     return {
-        "changed": int(n_changed),
-        "unchanged": int(total - n_changed),
-        "removed": int(n_removed),
-        "total": int(total),
+        "changed": int(n.reencode),
+        "unchanged": int(n.total - n.reencode),
+        "removed": int(n.removed),
+        "total": int(n.total),
     }
+
+
+def _reencode(
+    lake: IcebergLite,
+    table: str,
+    assigned: DataFrame,
+    redo: DataFrame,
+    n_tiles: int,
+    max_features_per_tile: int,
+    wire_format: str,
+    partition_buckets: int | None,
+) -> None:
+    """Encode the tiles in ``redo`` (status rows) and commit their
+    payloads and input checksums as overwrite snapshots."""
+    todo = assigned.join(
+        redo, _tile_key() == redo["tile_key"], "left_semi"
+    )
+    payloads = (
+        encode_assigned(
+            todo,
+            max_features_per_tile=max_features_per_tile,
+            with_mvt_baseline=False,
+            wire_format=wire_format,
+            num_parts=_reencode_parts(
+                assigned.sparkSession.sparkContext, n_tiles
+            ),
+        )
+        .withColumn("tile_key", _tile_key())
+        .withColumn("_part", _part_of(partition_buckets))
+    )
+    # cluster=True: one file per bucket dir instead of one per
+    # (encode task x bucket) — 812 -> 32 files at sf0.1, and the
+    # latest-wins read scan shrinks accordingly (guide §6)
+    lake.commit_partitions(
+        table, "encode", payloads, "_part", mode="overwrite", cluster=True,
+    )
+    # record the inputs that produced those payloads, same snapshot
+    # discipline: one row per re-encoded tile
+    lake.commit_partitions(
+        f"{table}_inputs", "inputs",
+        redo.select("tile_key", "input_checksum", "n_rows", "_part"),
+        "_part", mode="overwrite", cluster=True,
+    )

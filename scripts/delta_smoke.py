@@ -2,6 +2,10 @@
 no-change re-run vs small-change run, into BENCH/BASELINE.md.
 
 Usage: python scripts/delta_smoke.py [n_records] [buckets|tile]
+
+The session comes from ``get_spark()``: ``SPARK_GRAFT_CPUS`` sets the
+local core count and the shuffle width (e.g. ``SPARK_GRAFT_CPUS=4`` on
+a 4-core machine).
 """
 
 from __future__ import annotations
@@ -26,8 +30,7 @@ ZOOMS = [2, 3, 4, 5, 6, 7, 8]
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 300_000
-    spark = get_spark(app_name="delta-smoke", master="local[32]",
-                      shuffle_partitions=64)
+    spark = get_spark(app_name="delta-smoke")
     lake = IcebergLite(spark, tempfile.mkdtemp(prefix="delta_smoke_"))
     imgs = images_df(spark, n).persist()
     imgs.count()
@@ -60,7 +63,8 @@ def main() -> None:
         "## Incremental-materialization economics (pipeline/delta.py)",
         "",
         f"N={n:,} records, z{ZOOMS[0]}-z{ZOOMS[-1]} "
-        f"({s1['total']:,} tiles, {buckets} overwrite buckets), local[32]; "
+        f"({s1['total']:,} tiles, {buckets} overwrite buckets), "
+        f"{spark.sparkContext.master}; "
         "correctness of the incremental==full equivalence is gated "
         "(q_delta_tiles) and pytest-pinned — this table measures the "
         "ECONOMICS.",

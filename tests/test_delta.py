@@ -160,3 +160,90 @@ def test_delta_bucketed(spark, lake):
     # widened to whole buckets, but still far below a full rebuild
     assert 0 < s3["changed"] < s3["total"] // 2
     assert _latest(lake) == _full(spark, v2)
+
+
+def _input_rows(corpus) -> dict:
+    """tile key -> sorted input rows, recomputed in pandas from the
+    assignment (a multiset compare, independent of the checksum)."""
+    a = assign_tiles(corpus.select(*COLS), ZOOMS).toPandas()
+    keys = a.z.astype(str) + "_" + a.x.astype(str) + "_" + a.y.astype(str)
+    return {
+        k: sorted(g.itertuples(index=False, name=None))
+        for k, g in a.groupby(keys)
+    }
+
+
+def _expected_stats(spark, old: dict, new: dict, buckets) -> tuple[dict, int]:
+    """delta_materialize's stats for moving a lake from ``old`` to
+    ``new`` input rows, plus the number of buckets left with no tile."""
+    diff = {k for k in new if old.get(k) != new[k]}
+    gone = old.keys() - new.keys()
+    n_empty = 0
+    if buckets is not None:
+        bucket = {
+            r.k: r.b
+            for r in spark.createDataFrame(
+                [(k,) for k in old.keys() | new.keys()], "k string"
+            ).select("k", F.pmod(F.xxhash64("k"), F.lit(buckets)).alias("b"))
+            .collect()
+        }
+        touched = {bucket[k] for k in diff | gone}
+        n_empty = len(touched - {bucket[k] for k in new})
+        diff = {k for k in new if bucket[k] in touched}
+    stats = {
+        "changed": len(diff),
+        "unchanged": len(new) - len(diff),
+        "removed": len(gone),
+        "total": len(new),
+    }
+    return stats, n_empty
+
+
+@pytest.mark.parametrize("buckets", [None, 64])
+def test_delta_stats_exact(spark, lake, buckets):
+    """The returned counts equal a pandas recomputation from the two
+    corpora, on a change set that edits, adds and removes tiles — and,
+    at 64 buckets, empties whole buckets (the bucket-tombstone branch)."""
+    v1 = _corpus(spark)
+    v2 = _corpus(spark, mutate=True).filter(F.col("lat") > -60).union(
+        _corpus_rows(spark, [("imgX0002", "new", "raw", 8, 8, 5, 170.0, 80.0)])
+    )
+    old, new = _input_rows(v1), _input_rows(v2)
+    assert old.keys() - new.keys(), "some tiles must vanish"
+    assert new.keys() - old.keys(), "some tiles must be new"
+    assert any(old[k] != new[k] for k in old.keys() & new.keys())
+
+    s1 = delta_materialize(lake, v1, ZOOMS, partition_buckets=buckets)
+    assert s1 == _expected_stats(spark, {}, old, buckets)[0]
+
+    s2 = delta_materialize(lake, v2, ZOOMS, partition_buckets=buckets)
+    want, n_empty = _expected_stats(spark, old, new, buckets)
+    if buckets is not None:
+        assert n_empty > 0, "a bucket must lose all its tiles"
+    assert s2 == want
+    assert _latest(lake) == _full(spark, v2)
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_delta_releases_caches(spark, lake, monkeypatch):
+    """Every frame delta_materialize persists is released on return —
+    also when a commit raises midway. (Compared with the caches held
+    before the call, which are none when this module runs alone: other
+    tests share the session.)"""
+    before = _persisted(spark)
+    delta_materialize(lake, _corpus(spark), ZOOMS, partition_buckets=16)
+    assert _persisted(spark) == before
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(lake, "commit_partitions", boom)
+    with pytest.raises(RuntimeError, match="commit failed"):
+        delta_materialize(
+            lake, _corpus(spark, mutate=True, extra=True), ZOOMS,
+            partition_buckets=16,
+        )
+    assert _persisted(spark) == before
