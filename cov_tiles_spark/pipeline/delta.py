@@ -24,7 +24,6 @@ unchanged tiles cost one status row each, not an encode."""
 
 from __future__ import annotations
 
-from pyspark import SparkContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -36,12 +35,13 @@ from cov_tiles_spark.pipeline.materialize import (
 )
 from cov_tiles_spark.spatial.tiling import DEFAULT_EXTENT
 
-# Tiles per re-encode task before the exchange grows past one task per
-# core. Every Python task pays ~0.3 s of CPU before its first row
-# (worker hand-off plus pyspark's per-task import-cache invalidation,
-# which re-reads the pyspark.zip directory), while re-encoding a small
-# tile costs ~1.2 ms: 0.3 s / 1.2 ms = 250 tiles is where a task's
-# fixed cost stops outweighing the encode work it parallelises.
+# Tiles per core up to which the re-encode runs one task per core
+# instead of encode_assigned's default width. Every Python task pays
+# ~0.3 s of CPU before its first row (worker hand-off plus pyspark's
+# per-task import-cache invalidation, which re-reads the pyspark.zip
+# directory), while re-encoding a small tile costs ~1.2 ms: below
+# 0.3 s / 1.2 ms = 250 tiles per task, extra tasks cost more than the
+# encode work they parallelise.
 _TILES_PER_ENCODE_TASK = 250
 
 
@@ -151,15 +151,6 @@ def _tile_status(
     )
 
 
-def _reencode_parts(sc: SparkContext, n_tiles: int) -> int:
-    """Exchange width for re-encoding ``n_tiles``: one task per core
-    until tasks would exceed ``_TILES_PER_ENCODE_TASK`` tiles, then
-    growing up to ``encode_assigned``'s default width."""
-    cores = sc.defaultParallelism
-    wanted = -(-n_tiles // _TILES_PER_ENCODE_TASK)
-    return min(max(cores, wanted), max(cores * 8, 16))
-
-
 def delta_materialize(
     lake: IcebergLite,
     images: DataFrame,
@@ -182,10 +173,9 @@ def delta_materialize(
     checksums with them into a cached frame, and a single aggregation
     over it returns every count; tombstone commits, the re-encode and
     the new ``<table>_inputs`` rows all filter that frame. Tombstones
-    are committed only when the pass counted some, and the re-encode
-    exchange is sized to the re-encoded tile count
-    (:func:`_reencode_parts`). Every cached frame is released on
-    return, error or not.
+    are committed only when the pass counted some, and a re-encode of
+    at most ``_TILES_PER_ENCODE_TASK`` tiles per core runs one task per
+    core. Every cached frame is released on return, error or not.
 
     ``partition_buckets``: overwrite granularity. Per-tile partitions
     (None) re-encode the minimum but create one hive directory per tile
@@ -245,6 +235,7 @@ def _reencode(
 ) -> None:
     """Encode the tiles in ``redo`` (status rows) and commit their
     payloads and input checksums as overwrite snapshots."""
+    cores = assigned.sparkSession.sparkContext.defaultParallelism
     todo = assigned.join(
         redo, _tile_key() == redo["tile_key"], "left_semi"
     )
@@ -254,8 +245,8 @@ def _reencode(
             max_features_per_tile=max_features_per_tile,
             with_mvt_baseline=False,
             wire_format=wire_format,
-            num_parts=_reencode_parts(
-                assigned.sparkSession.sparkContext, n_tiles
+            num_parts=(
+                cores if n_tiles <= cores * _TILES_PER_ENCODE_TASK else None
             ),
         )
         .withColumn("tile_key", _tile_key())
