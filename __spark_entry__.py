@@ -656,7 +656,7 @@ def _events_images_fast(spark, sf_dir):
     Two results-identical optimizations (guide §2.3/§2.5):
     - ``image_id`` stays the int64 ``event_id``: the encode kernel
       parses the ``img-%012d`` string right back to int64
-      (``_extract_arrays`` str.slice(4).astype), so the string build,
+      (``_extract_arrays_arrow`` slice + cast), so the string build,
       its ~20 shuffle bytes/row, and the 3M-object Arrow transfer were
       pure overhead. Decoded ``feature_id`` is the same int64 either
       way, and the (z, x, y, image_id) encode sort orders int64 ids

@@ -2,7 +2,7 @@
 
 Kernel inventory (SURVEY.md §2.8): varint (K1), zigzag (K2), delta (K3),
 ORC-style int RLE v1 (K4), byte RLE (K5), boolean bitset (K6), float32 LE
-(K7), UTF-8 strings (K8), Morton (K11), Hilbert (K12), z-order (K13).
+(K7), UTF-8 strings (K8), Morton (K11), Hilbert (K12).
 """
 
 from cov_tiles_spark.covt.varint import (

@@ -1,4 +1,4 @@
-"""Space-filling curves: Morton, Hilbert, z-order (kernels K11-K13).
+"""Space-filling curves: Morton and Hilbert (kernels K11-K12).
 
 Semantics match the reference:
 - Morton: bit-interleave of (x, y) after a ``tile_extent/2`` shift so that
@@ -8,8 +8,6 @@ Semantics match the reference:
   (`GeometryUtils.java:8-21`, which delegates to a public-domain
   iterative rotate/swap algorithm; re-derived here from the classic
   Hilbert curve construction, fully vectorized).
-- z-order 10-bit normalized variant
-  (`evaluation/js/src/encodings/spaceFillingCurveUtils.ts:4-23`).
 
 All functions operate on numpy int arrays elementwise (no Python loops over
 elements; the Hilbert iteration is over *bit levels*, <= 16 rounds).
@@ -139,19 +137,3 @@ def hilbert_decode(code: np.ndarray, extent: int, bits: int) -> tuple[np.ndarray
     shift = np.int64(extent // 2)
     x, y = hilbert_d2xy(bits, code)
     return x.astype(np.int64) - shift, y.astype(np.int64) - shift
-
-
-def zorder_10bit(x_zz: np.ndarray, y_zz: np.ndarray) -> np.ndarray:
-    """10-bit normalized z-order of zigzag-coded coords.
-
-    Mirrors `spaceFillingCurveUtils.ts:4-23`: zigzag-decode, scale to a
-    1024 grid by adding 512 (tile coords are ~[-512, 511] at that scale),
-    then interleave.
-    """
-    from cov_tiles_spark.covt.varint import zigzag_decode
-
-    x = zigzag_decode(np.asarray(x_zz)) + 512
-    y = zigzag_decode(np.asarray(y_zz)) + 512
-    return morton_interleave(
-        x.astype(np.uint64) & np.uint64(0x3FF), y.astype(np.uint64) & np.uint64(0x3FF)
-    )

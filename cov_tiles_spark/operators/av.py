@@ -33,9 +33,6 @@ from pyspark.sql import DataFrame
 
 from cov_tiles_spark.operators.images import phash64
 
-AUDIO_FORMATS = ("pcm16",)
-VIDEO_FORMATS = ("rawv",)
-
 
 # ---------------------------------------------------------------- audio
 

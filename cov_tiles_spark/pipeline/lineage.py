@@ -24,16 +24,36 @@ catalog is available; nothing else in the engine would change.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = (
     "table string, snapshot_id string, partition_key string, n_rows long, "
     "n_bytes long, checksum long, committed_at_ns long, stage string"
 )
+
+
+def _ranked(m: DataFrame) -> DataFrame:
+    """Manifest rows plus ``_rk``: each partition_key's versions numbered
+    newest first (commit time, then snapshot id as the tiebreak), so
+    ``_rk == 1`` is the version latest-wins reads serve."""
+    w = Window.partitionBy("partition_key").orderBy(
+        F.col("committed_at_ns").desc(), F.col("snapshot_id").desc()
+    )
+    return m.withColumn("_rk", F.row_number().over(w))
+
+
+def _checksum(cols: list[str]) -> Column:
+    """Partition checksum aggregate: xor-fold of every row's xxhash64 —
+    order-insensitive and immune to ANSI overflow. Columns are NAME-SORTED
+    so the checksum is comparable across frames that arrange columns
+    differently (compact_partitions verifies a rewrite's commit against
+    the rows it read back)."""
+    return F.expr(f"bit_xor(xxhash64({', '.join(sorted(cols))}))")
 
 
 class IcebergLite:
@@ -95,11 +115,12 @@ class IcebergLite:
         812 files -> 32 on the delta gate, and every later
         ``read_table`` scan lists/opens proportionally fewer files —
         guide-§6 output sizing). The same shuffle co-locates the
-        metrics groupBy, which then needs no exchange of its own. Leave
-        False when the caller already clusters (compact_partitions), in
-        per-record streaming commits (a blocking per-batch shuffle), or
-        when one partition key is planet-hot (identical keys land on ONE
-        task — the repartitionByRange tiebreak gotcha applies)."""
+        metrics groupBy, which then needs no exchange of its own.
+        delta_materialize and compact_partitions commit this way. Leave
+        False in per-record streaming commits (a blocking per-batch
+        shuffle), or when one partition key is planet-hot (identical
+        keys land on ONE task — the repartitionByRange tiebreak gotcha
+        applies)."""
         if mode not in ("skip-done", "overwrite"):
             raise ValueError(f"unknown commit mode {mode!r}")
         if mode == "skip-done":
@@ -119,10 +140,7 @@ class IcebergLite:
         data_dir = f"{self.root}/{table}/snapshot_id={snapshot_id}"
         if cluster:
             df = df.repartition(F.col(partition_col))
-        pending = df.cache()
-        # per-partition metrics + checksum (xxhash64 of every cell, xor-agg)
-        cols = [c for c in pending.columns]
-        dtypes = dict(pending.dtypes)
+        dtypes = dict(df.dtypes)
         # logical byte size = sum of per-column octet lengths
         # (octet_length counts UTF-8 bytes for strings, raw bytes for
         # binary); binary columns avoid the previous to_json(struct())
@@ -137,48 +155,26 @@ class IcebergLite:
                 ),
                 F.lit(0),
             )
-            for c in cols
+            for c in df.columns
         ]
         byte_expr = sizes[0]
         for e in sizes[1:]:
             byte_expr = byte_expr + e
-        metrics = (
-            pending.groupBy(F.col(partition_col).cast("string").alias("partition_key"))
-            .agg(
+        pending = df.cache()
+        try:
+            metrics = pending.groupBy(
+                F.col(partition_col).cast("string").alias("partition_key")
+            ).agg(
                 F.count("*").alias("n_rows"),
                 F.sum(byte_expr.cast("long")).alias("n_bytes"),
-                # xor-fold: order-insensitive and immune to ANSI overflow;
-                # columns NAME-SORTED so the checksum is comparable across
-                # commits whose DataFrames arrange columns differently
-                # (compact_partitions verifies rewrites against the
-                # superseded winner's checksum)
-                F.expr(
-                    f"bit_xor(xxhash64({', '.join(sorted(cols))}))"
-                ).alias("checksum"),
+                _checksum(pending.columns).alias("checksum"),
             )
-        )
-        if metrics.isEmpty():
+            if metrics.isEmpty():
+                return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            pending.write.partitionBy(partition_col).mode("append").parquet(data_dir)
+            return self._append_manifest(table, stage, snapshot_id, metrics)
+        finally:
             pending.unpersist()
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
-
-        pending.write.partitionBy(partition_col).mode("append").parquet(data_dir)
-
-        manifest = metrics.select(
-            F.lit(table).alias("table"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-            "partition_key",
-            "n_rows",
-            "n_bytes",
-            "checksum",
-            F.lit(time.time_ns()).alias("committed_at_ns"),
-            F.lit(stage).alias("stage"),
-        )
-        manifest.write.mode("append").parquet(self._manifest_dir)
-        pending.unpersist()
-        # return the COMMITTED rows read back by snapshot id: the lazy
-        # `manifest` plan re-runs the resume anti-join on evaluation, and
-        # post-commit that join sees this very snapshot as done -> empty
-        return self.manifests().filter(F.col("snapshot_id") == snapshot_id)
 
     def commit_tombstones(
         self, table: str, stage: str, keys: DataFrame,
@@ -193,19 +189,62 @@ class IcebergLite:
         Returns the manifest rows written (empty if ``keys`` is)."""
         if keys.isEmpty():
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
-        snapshot_id = uuid.uuid4().hex[:16]
-        manifest = keys.select(
+        zero = F.lit(0).cast("long")
+        return self._append_manifest(
+            table, stage, uuid.uuid4().hex[:16], keys.select(
+                F.col(partition_col).cast("string").alias("partition_key"),
+                zero.alias("n_rows"),
+                zero.alias("n_bytes"),
+                zero.alias("checksum"),
+            ),
+        )
+
+    def _append_manifest(
+        self, table: str, stage: str, snapshot_id: str, parts: DataFrame
+    ) -> DataFrame:
+        """Append one manifest row per ``parts`` row (partition_key,
+        n_rows, n_bytes, checksum) under ``snapshot_id``, stamped with the
+        commit time. Returns the COMMITTED rows read back by snapshot id:
+        a lazy plan over ``parts`` may re-run a resume anti-join on
+        evaluation, and post-commit that join sees this very snapshot as
+        done -> empty."""
+        parts.select(
             F.lit(table).alias("table"),
             F.lit(snapshot_id).alias("snapshot_id"),
-            F.col(partition_col).cast("string").alias("partition_key"),
-            F.lit(0).cast("long").alias("n_rows"),
-            F.lit(0).cast("long").alias("n_bytes"),
-            F.lit(0).cast("long").alias("checksum"),
+            "partition_key",
+            "n_rows",
+            "n_bytes",
+            "checksum",
             F.lit(time.time_ns()).alias("committed_at_ns"),
             F.lit(stage).alias("stage"),
-        )
-        manifest.write.mode("append").parquet(self._manifest_dir)
+        ).write.mode("append").parquet(self._manifest_dir)
         return self.manifests().filter(F.col("snapshot_id") == snapshot_id)
+
+    def _swap_manifests(self, keep: DataFrame) -> None:
+        """Replace the manifest table with ``keep``: copy-then-swap on a
+        local/posix lake; a real Iceberg catalog does this as an atomic
+        metadata pointer flip — swap-in path unchanged."""
+        tmp = f"{self._manifest_dir}.tmp-{uuid.uuid4().hex[:8]}"
+        keep.write.mode("overwrite").parquet(tmp)
+        old = f"{self._manifest_dir}.old-{uuid.uuid4().hex[:8]}"
+        os.rename(self._manifest_dir, old)
+        os.rename(tmp, self._manifest_dir)
+        shutil.rmtree(old)
+        # drop Spark's cached file listing for the swapped path, or the
+        # next manifests() read resolves the pre-swap file set
+        self.spark.catalog.refreshByPath(self._manifest_dir)
+
+    def _partition_col(self, table: str) -> str | None:
+        """The data partition column, recovered from the hive layout
+        (data lands under ``<table>/snapshot_id=<id>/<col>=<key>/``);
+        None when no snapshot directory holds data."""
+        base = f"{self.root}/{table}"
+        for d in sorted(os.listdir(base)) if os.path.isdir(base) else []:
+            if d.startswith("snapshot_id="):
+                for e in os.listdir(f"{base}/{d}"):
+                    if "=" in e:
+                        return e.split("=", 1)[0]
+        return None
 
     # ---------------- read path ----------------
 
@@ -248,41 +287,18 @@ class IcebergLite:
             )
         df = self.spark.read.option("basePath", base).parquet(*paths)
         if latest_only:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("partition_key").orderBy(
-                F.col("committed_at_ns").desc(), F.col("snapshot_id").desc()
+            winners = _ranked(vis).filter(F.col("_rk") == 1).select(
+                F.col("snapshot_id").alias("_w_snap"),
+                F.col("partition_key").alias("_w_pk"),
             )
-            winners = (
-                vis.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .select(
-                    F.col("snapshot_id").alias("_w_snap"),
-                    F.col("partition_key").alias("_w_pk"),
-                )
-            )
-            pcol = [c for c in df.columns if c not in ("snapshot_id",)]
-            part_col = self._partition_col_of(df)
+            pcol = self._partition_col(table)
             df = df.join(
                 F.broadcast(winners),
                 (df["snapshot_id"] == winners["_w_snap"])
-                & (df[part_col].cast("string") == winners["_w_pk"]),
+                & (df[pcol].cast("string") == winners["_w_pk"]),
                 "left_semi",
-            ).select(*pcol)
+            )
         return df.drop("snapshot_id")
-
-    @staticmethod
-    def _partition_col_of(df: DataFrame) -> str:
-        """The hive-partition column parquet recovered besides
-        snapshot_id (data lands under
-        snapshot_id=<id>/<partition_col>=<key>/)."""
-        # snapshot_id and the data partition col are the trailing
-        # partition-discovery columns; the data col is the one whose
-        # values appear as partition_key strings in the manifest
-        for c in reversed(df.columns):
-            if c != "snapshot_id":
-                return c
-        raise ValueError("no partition column recovered")
 
     def snapshots(self, table: str) -> DataFrame:
         """Snapshot log: (snapshot_id, stage, committed_at_ns,
@@ -304,36 +320,22 @@ class IcebergLite:
         """Drop every snapshot of ``table`` committed after ``as_of_ns``
         from the manifest (data files stay; invisible without manifest
         rows — Iceberg's rollback model). Returns snapshots dropped.
-
-        The manifest rewrite is copy-then-swap on a local/posix lake;
-        a real Iceberg catalog does this as an atomic metadata pointer
-        flip — swap-in path unchanged."""
+        The manifest rewrite is :meth:`_swap_manifests`."""
         m = self.manifests().cache()
-        doomed = (
-            m.filter((F.col("table") == table)
-                     & (F.col("committed_at_ns") > as_of_ns))
-            .select("snapshot_id").distinct().count()
-        )
-        if doomed == 0:
+        try:
+            doomed = (
+                m.filter((F.col("table") == table)
+                         & (F.col("committed_at_ns") > as_of_ns))
+                .select("snapshot_id").distinct().count()
+            )
+            if doomed:
+                self._swap_manifests(m.filter(
+                    (F.col("table") != table)
+                    | (F.col("committed_at_ns") <= as_of_ns)
+                ))
+        finally:
             m.unpersist()
-            return 0
-        keep = m.filter(
-            (F.col("table") != table) | (F.col("committed_at_ns") <= as_of_ns)
-        )
-        tmp = f"{self._manifest_dir}.tmp-{uuid.uuid4().hex[:8]}"
-        keep.write.mode("overwrite").parquet(tmp)
-        m.unpersist()
-        old = f"{self._manifest_dir}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(self._manifest_dir, old)
-        os.rename(tmp, self._manifest_dir)
-        import shutil
-
-        shutil.rmtree(old)
-        # drop Spark's cached file listing for the swapped path, or the
-        # next manifests() read resolves the pre-rollback file set
-        self.spark.catalog.refreshByPath(self._manifest_dir)
         return doomed
-
 
     # ---------------- maintenance ----------------
 
@@ -353,34 +355,23 @@ class IcebergLite:
 
         File deletion is a driver-side posix walk on this lite lake; a
         real Iceberg catalog does the same from its file manifests."""
-        import shutil
-
         m = self.manifests().filter(F.col("table") == table).cache()
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("partition_key").orderBy(
-            F.col("committed_at_ns").desc(), F.col("snapshot_id").desc()
-        )
-        versions = m.withColumn("_rk", F.row_number().over(w))
-        doomed = versions.filter(
-            (F.col("_rk") > 1) & (F.col("committed_at_ns") <= older_than_ns)
-        ).select("snapshot_id", "partition_key", "n_bytes").collect()
-        m.unpersist()
+        try:
+            doomed = _ranked(m).filter(
+                (F.col("_rk") > 1) & (F.col("committed_at_ns") <= older_than_ns)
+            ).select("snapshot_id", "partition_key", "n_bytes").collect()
+        finally:
+            m.unpersist()
         if not doomed:
             return {"versions_expired": 0, "bytes_reclaimed": 0, "dirs_removed": 0}
 
         base = f"{self.root}/{table}"
-        pcol = None
+        pcol = self._partition_col(table)
         dirs_removed = 0
         for r in doomed:
             snap_dir = f"{base}/snapshot_id={r.snapshot_id}"
-            if pcol is None and os.path.isdir(snap_dir):
-                for d in os.listdir(snap_dir):
-                    if "=" in d:
-                        pcol = d.split("=", 1)[0]
-                        break
-            part_dir = f"{snap_dir}/{pcol}={r.partition_key}" if pcol else None
-            if part_dir and os.path.isdir(part_dir):
+            part_dir = f"{snap_dir}/{pcol}={r.partition_key}"
+            if pcol and os.path.isdir(part_dir):
                 shutil.rmtree(part_dir)
                 dirs_removed += 1
             # drop now-empty snapshot dirs so read_table's listing stays clean
@@ -389,7 +380,6 @@ class IcebergLite:
             ):
                 shutil.rmtree(snap_dir)
 
-        # manifest rewrite: copy-then-swap (same model as rollback)
         doomed_keys = {(r.snapshot_id, r.partition_key) for r in doomed}
         doomed_df = self.spark.createDataFrame(
             [(s, k) for s, k in doomed_keys], "snapshot_id string, partition_key string"
@@ -397,37 +387,24 @@ class IcebergLite:
             "partition_key", "_d_pk"
         )
         all_m = self.manifests()
-        keep = all_m.join(
+        self._swap_manifests(all_m.join(
             F.broadcast(doomed_df),
             (all_m["table"] == table)
             & (all_m["snapshot_id"] == doomed_df["_d_snap"])
             & (all_m["partition_key"] == doomed_df["_d_pk"]),
             "left_anti",
-        )
-        tmp = f"{self._manifest_dir}.tmp-{uuid.uuid4().hex[:8]}"
-        keep.write.mode("overwrite").parquet(tmp)
-        old = f"{self._manifest_dir}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(self._manifest_dir, old)
-        os.rename(tmp, self._manifest_dir)
-        shutil.rmtree(old)
-        self.spark.catalog.refreshByPath(self._manifest_dir)
+        ))
         return {
             "versions_expired": len(doomed),
             "bytes_reclaimed": int(sum(r.n_bytes for r in doomed)),
             "dirs_removed": dirs_removed,
         }
 
-    def compact_partitions(
-        self,
-        table: str,
-        stage: str,
-        max_files_per_partition: int = 1,
-        shuffle_partitions: int | None = None,
-    ) -> dict:
-        """Small-file compaction: rewrite fragmented partitions' latest
-        rows as ONE new overwrite snapshot with ``repartition(pcol)``
-        file placement (each key's rows land in one task → one file per
-        partition directory).
+    def compact_partitions(self, table: str, stage: str) -> dict:
+        """Small-file compaction: rewrite the latest rows of every
+        partition whose winning version holds more than one file as ONE
+        new overwrite snapshot, committed with ``cluster=True`` (each
+        key's rows land in one task → one file per partition directory).
 
         Safety invariant from the lineage model: before the rewrite, the
         fragmented partitions' xor-fold checksums are recomputed from
@@ -443,36 +420,23 @@ class IcebergLite:
         an object-store deployment consults its file manifests instead).
         Old versions stay time-travelable until
         :meth:`expire_snapshots`."""
-        from pyspark.sql import Window
-
-        m = self.manifests().filter(F.col("table") == table)
-        w = Window.partitionBy("partition_key").orderBy(
-            F.col("committed_at_ns").desc(), F.col("snapshot_id").desc()
-        )
-        winners = (
-            m.withColumn("_rk", F.row_number().over(w))
-            .filter((F.col("_rk") == 1) & (F.col("n_rows") > 0))
-            .select("snapshot_id", "partition_key")
-            .collect()
-        )
+        winners = _ranked(
+            self.manifests().filter(F.col("table") == table)
+        ).filter((F.col("_rk") == 1) & (F.col("n_rows") > 0)).select(
+            "snapshot_id", "partition_key"
+        ).collect()
         base = f"{self.root}/{table}"
+        pcol = self._partition_col(table)
         frag_keys: list[str] = []
-        pcol = None
         for r in winners:
-            snap_dir = f"{base}/snapshot_id={r.snapshot_id}"
-            if pcol is None and os.path.isdir(snap_dir):
-                for d in os.listdir(snap_dir):
-                    if "=" in d:
-                        pcol = d.split("=", 1)[0]
-                        break
-            pdir = f"{snap_dir}/{pcol}={r.partition_key}" if pcol else None
-            if not pdir or not os.path.isdir(pdir):
+            pdir = f"{base}/snapshot_id={r.snapshot_id}/{pcol}={r.partition_key}"
+            if not pcol or not os.path.isdir(pdir):
                 continue
             n_files = sum(
                 1 for f in os.listdir(pdir)
                 if f.startswith("part-") and f.endswith(".parquet")
             )
-            if n_files > max_files_per_partition:
+            if n_files > 1:
                 frag_keys.append(r.partition_key)
         if not frag_keys:
             return {"partitions_compacted": 0, "checksums_verified": 0}
@@ -481,30 +445,23 @@ class IcebergLite:
             [(k,) for k in frag_keys], "partition_key string"
         ).withColumnRenamed("partition_key", "_c_pk")
         cur = self.read_table(table, latest_only=True)
-        part_col = self._partition_col_of_name(base)
         frag = cur.join(
             F.broadcast(keys_df),
-            cur[part_col].cast("string") == keys_df["_c_pk"],
+            cur[pcol].cast("string") == keys_df["_c_pk"],
             "left_semi",
         ).cache()
-        old_sums = {
-            r.partition_key: r.checksum
-            for r in frag.groupBy(
-                F.col(part_col).cast("string").alias("partition_key")
-            )
-            .agg(
-                F.expr(
-                    f"bit_xor(xxhash64({', '.join(sorted(frag.columns))}))"
-                ).alias("checksum")
-            )
-            .collect()
-        }
-        n_shuffle = shuffle_partitions or max(1, min(len(frag_keys), 200))
-        compacted = frag.repartition(n_shuffle, F.col(part_col))
-        new_rows = self.commit_partitions(
-            table, stage, compacted, part_col, mode="overwrite"
-        ).select("partition_key", "checksum").collect()
-        frag.unpersist()
+        try:
+            old_sums = {
+                r.partition_key: r.checksum
+                for r in frag.groupBy(
+                    F.col(pcol).cast("string").alias("partition_key")
+                ).agg(_checksum(frag.columns).alias("checksum")).collect()
+            }
+            new_rows = self.commit_partitions(
+                table, stage, frag, pcol, mode="overwrite", cluster=True
+            ).select("partition_key", "checksum").collect()
+        finally:
+            frag.unpersist()
         mismatches = [
             r.partition_key
             for r in new_rows
@@ -520,16 +477,6 @@ class IcebergLite:
             "partitions_compacted": len(new_rows),
             "checksums_verified": len(new_rows),
         }
-
-    def _partition_col_of_name(self, base: str) -> str:
-        """The data partition column name, recovered from any snapshot
-        directory's hive layout."""
-        for d in sorted(os.listdir(base)):
-            if d.startswith("snapshot_id="):
-                for e in os.listdir(f"{base}/{d}"):
-                    if "=" in e:
-                        return e.split("=", 1)[0]
-        raise ValueError(f"no partitioned snapshots under {base}")
 
 
 def run_stage(

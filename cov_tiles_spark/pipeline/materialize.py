@@ -13,9 +13,9 @@ The Spark lifecycle equivalent of the reference's per-tile converter loop
 Scale design (SURVEY.md §4.2):
 - **Bounded groups**: low-zoom tiles are inherently hot (z2 = 16 tiles
   worldwide). Groups are bounded *by construction* with a deterministic
-  per-tile feature cap (hash-ranked uniform sample, ``cap_tile_features``)
-  — real tile pipelines cap per-tile features at low zoom for the same
-  reason.
+  per-tile feature cap (hash-ranked uniform sample, applied inline by the
+  sorted encode stream) — real tile pipelines cap per-tile features at
+  low zoom for the same reason.
 - **AQE skew split** handles residual partition skew in the shuffle
   (spark.sql.adaptive.skewJoin/coalescePartitions enabled in session.py).
 - **Map-side partial agg**: raster-grid aggregates use built-in
@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cov_tiles_spark.covt.decoder import GeometryColumn, decode_covt
@@ -73,27 +73,6 @@ def assign_tiles(
     return images.withColumn("tile", F.explode(F.array(*per_zoom))).select(
         "*", "tile.*"
     ).drop("tile")
-
-
-def cap_tile_features(assigned: DataFrame, max_features: int) -> DataFrame:
-    """Window-based per-tile cap (standalone operator).
-
-    Rank by ``xxhash64(image_id, z)`` (a deterministic uniform sample —
-    spatially unbiased, unlike a Hilbert-prefix cut) with image_id
-    tie-break; keep the first ``max_features``. JVM-only expressions.
-
-    ``materialize_tiles`` applies the *same selection* inline in its
-    sorted encode stream (zero extra exchange); this window form remains
-    for capping ahead of other consumers.
-    """
-    w = Window.partitionBy("z", "x", "y").orderBy(
-        F.xxhash64("image_id", F.col("z")), F.col("image_id")
-    )
-    return (
-        assigned.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= max_features)
-        .drop("_rank")
-    )
 
 
 def _encode_tile_rows(
@@ -180,33 +159,12 @@ _STREAM_COLS = ("z", "x", "y", "image_id", "local_x", "local_y",
                 "caption", "fmt", "w", "h", "phash")
 
 
-def _extract_arrays(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
-    ids = (
-        pdf["image_id"].str.slice(4).astype(np.int64).to_numpy()
-        if pdf["image_id"].dtype == object
-        else pdf["image_id"].to_numpy(np.int64)
-    )
-    return {
-        "z": pdf["z"].to_numpy(np.int64),
-        "x": pdf["x"].to_numpy(np.int64),
-        "y": pdf["y"].to_numpy(np.int64),
-        "ids": ids,
-        "local_x": pdf["local_x"].to_numpy(np.int64),
-        "local_y": pdf["local_y"].to_numpy(np.int64),
-        "caption": pdf["caption"].to_numpy(dtype=object),
-        "fmt": pdf["fmt"].to_numpy(dtype=object),
-        "w": pdf["w"].to_numpy(np.int64),
-        "h": pdf["h"].to_numpy(np.int64),
-        "phash": pdf["phash"].to_numpy(np.int64),
-    }
-
-
 def _concat_arrays(a: dict, b: dict) -> dict:
     return {k: np.concatenate([a[k], b[k]]) for k in a}
 
 
 def _extract_arrays_arrow(batch) -> dict[str, np.ndarray]:
-    """Arrow-native twin of :func:`_extract_arrays` (guide §4.1/§4.2):
+    """Record batch -> per-column numpy arrays (guide §4.1/§4.2):
     taking the record batch directly skips the Arrow→pandas conversion,
     whose per-row Python string objects (image_id/caption/fmt over 3M
     rows) were ~2/3 of the encode stage's wall at sf1. Strings are
@@ -303,7 +261,7 @@ def _encode_tiles_in(
 
 
 def _make_encode_stream(
-    with_mvt_baseline: bool, max_features: int = 1 << 62, wire_format: str = "gena"
+    with_mvt_baseline: bool, max_features: int, wire_format: str = "gena"
 ):
     """Streaming partition encoder with an inline per-tile cap.
 
@@ -480,14 +438,6 @@ def _make_precap_stream(cap: int, schema_cols: list[str]):
                 yield kept_pdf[schema_cols]
 
     return precap
-
-
-def _encode_group(pdf: pd.DataFrame, with_mvt_baseline: bool = True) -> pd.DataFrame:
-    """Grouped-map compatibility wrapper around the array kernel."""
-    arrs = _extract_arrays(pdf)
-    out: list[dict] = []
-    _encode_tiles_in(arrs, len(pdf), with_mvt_baseline, out)
-    return pd.DataFrame(out)
 
 
 def materialize_tiles(

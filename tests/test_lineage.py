@@ -160,3 +160,22 @@ def test_clustered_commit_writes_one_file_per_partition(spark, lake):
     got = lake.read_table("tc", latest_only=True)
     assert got.count() == 400
     assert got.agg(F.sum("id")).collect()[0][0] == sum(range(400))
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_failed_commit_releases_cache(spark, lake):
+    """A commit whose rows raise mid-evaluation (after the pending frame
+    is cached) leaves no persisted RDD behind."""
+    before = _persisted(spark)
+    df = spark.range(40).select(
+        F.when(F.col("id") == 17, F.raise_error(F.lit("row 17 failed")))
+        .otherwise(F.col("id")).alias("id"),
+        (F.col("id") % 4).cast("string").alias("bucket"),
+    )
+    with pytest.raises(Exception, match="row 17 failed"):
+        lake.commit_partitions("tf", "s1", df, "bucket", mode="overwrite")
+    assert _persisted(spark) == before
+    assert lake.committed_keys("tf", "s1") == set()
